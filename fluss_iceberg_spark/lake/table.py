@@ -689,6 +689,21 @@ def _bucket_of_path(relpath: str) -> int | None:
     return None
 
 
+def _is_driver_local(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is a ``LocalRelation``: its rows
+    sit in driver memory, so collecting it (or a projection of it) runs no
+    Spark job. Any other leaf in the analyzed plan (a scan, an RDD)
+    answers no without running the optimizer."""
+    qe = df._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    if any(
+        leaves.apply(i).getClass().getSimpleName() != "LocalRelation"
+        for i in range(leaves.size())
+    ):
+        return False
+    return qe.optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+
+
 def _where_filter(where: list[tuple]) -> F.Column:
     """The Spark filter for a scan predicate — always applied to the
     scanned rows, so results are independent of how well pruning did."""
@@ -1471,12 +1486,7 @@ class LakeTable:
           lake_scd2_dimension, stream_txn_two_sinks; adjudicated by the
           interleaved A/B in OPTIMIZATION_r13.md).
 
-        ``FLUSS_MERGE_DELTA=persist`` restores the r12 unconditional
-        persist (the A/B toggle). Returns ``(frame, release_fn)``."""
-        mode = os.environ.get("FLUSS_MERGE_DELTA", "auto")
-        if mode == "persist":
-            p = df.persist()
-            return p, p.unpersist
+        Returns ``(frame, release_fn)``."""
         try:
             heavy = bool(
                 self._HEAVY_PLAN_RE.search(
@@ -1707,8 +1717,13 @@ class LakeTable:
             else:
                 df = df.repartitionByRange(F.col(ccol))
             df = df.sortWithinPartitions(ccol)
-        version = self._next_version()
-        files = self._write_files(df, version, bucketed=False)
+        return self._commit_append(
+            self._write_files(df, self._next_version(), bucketed=False)
+        )
+
+    def _commit_append(self, files: list[str]) -> Snapshot:
+        """Commit ``files`` (already under ``data/s{next version}/``) as
+        an append on top of the current snapshot."""
         added = self._rows_in(files)
         parent = self.snapshot()
         all_files = (parent.files if parent else []) + files
@@ -1753,10 +1768,22 @@ class LakeTable:
         of SQL MERGE, and the scale path for key-targeted deletion (the
         touched-bucket rewrite is bounded by the delete key set, never
         the table).
+
+        Driver-local inputs (every input's optimized plan is a
+        ``LocalRelation``, e.g. a frame built from a collected Arrow
+        table) take the touched buckets and the ambiguity guard on the
+        driver: their rows are already there, so the bucket write is the
+        merge's only Spark action.
         """
         if not self.primary_key:
             raise ValueError(f"{self.name}: merge() requires a primary key")
         updates = self._enforce_not_null(self._prepare(updates))
+        if deletes is not None:
+            deletes = deletes.select(*self.primary_key)
+        if _is_driver_local(updates) and (
+            deletes is None or _is_driver_local(deletes)
+        ):
+            return self._merge_inner(*self._local_touch(updates, deletes))
         # collapse intra-batch duplicates: last occurrence per key wins is
         # undefined without order, so use an arbitrary-but-deterministic
         # max-by over all columns via row_number on a monotonic id
@@ -1770,76 +1797,104 @@ class LakeTable:
         )
         rel_d = lambda: None  # noqa: E731
         if deletes is not None:
-            deletes, rel_d = self._materialize_delta(
-                deletes.select(*self.primary_key).dropDuplicates()
-            )
+            deletes, rel_d = self._materialize_delta(deletes.dropDuplicates())
         try:
-            return self._merge_inner(updates, deletes)
+            return self._merge_inner(*self._spark_touch(updates, deletes))
         finally:
             rel_u()
             rel_d()
 
-    def _merge_inner(
+    def _local_touch(
         self, updates: DataFrame, deletes: DataFrame | None
-    ) -> Snapshot:
-        parent = self.snapshot()
-        version = self._next_version()
-        touch_keys = updates.select(*self.primary_key)
+    ) -> tuple[DataFrame, list[int], DataFrame]:
+        """``(updates, touched buckets, touched keys)`` for driver-local
+        inputs, with no Spark job: a projection over a ``LocalRelation``
+        folds into another one, so collecting the keys with their bucket
+        ids (the same Spark hash expression the write uses) reads driver
+        memory. Delete keys take the table's key types first — they are
+        hashed and matched against rows stored under those types."""
+        pk = self.primary_key
+        upd = updates.select(*pk, self._bucket_col().alias("__bucket")).collect()
+        touched = {r["__bucket"] for r in upd}
+        upd_keys = [tuple(r)[:-1] for r in upd]
+        touch_keys = updates.select(*pk)
         if deletes is not None:
-            touch_keys = touch_keys.unionByName(deletes)
-        if deletes is not None:
-            # ONE stats job answers both driver questions (r13, guide §2
-            # "remove actions outright"): the touched-bucket set AND the
-            # ambiguity guard (a key in both updates and deletes is
-            # ambiguous — Iceberg MERGE likewise rejects multi-action
-            # matches). Both sides are already key-distinct, so a key
-            # seen from both sources groups to min=0/max=1.
-            tagged = (
-                updates.select(*self.primary_key)
-                .withColumn("__src", F.lit(0))
-                .unionByName(deletes.withColumn("__src", F.lit(1)))
+            deletes = deletes.select(
+                *[F.col(k).cast(self.schema[k].dataType).alias(k) for k in pk]
             )
-            stat = (
-                tagged.groupBy(*self.primary_key)
-                .agg(
-                    F.min("__src").alias("__mn"),
-                    F.max("__src").alias("__mx"),
-                )
-                .withColumn("__bucket", self._bucket_col())
-                .agg(
-                    F.collect_set("__bucket").alias("bks"),
-                    F.max((F.col("__mn") == 0) & (F.col("__mx") == 1)).alias(
-                        "amb"
-                    ),
-                )
-                .collect()[0]
-            )
-            if stat["amb"]:
+            dels = deletes.select(
+                *pk, self._bucket_col().alias("__bucket")
+            ).collect()
+            # Python tuple equality is NULL-safe (None == None), like the
+            # eqNullSafe key match of the Spark path
+            if set(upd_keys) & {tuple(r)[:-1] for r in dels}:
                 raise ValueError(
                     f"{self.name}: merge() key appears in both updates and deletes"
                 )
-            touched = list(stat["bks"] or [])
-        else:
+            touched |= {r["__bucket"] for r in dels}
+            touch_keys = touch_keys.unionByName(deletes)
+        if len(set(upd_keys)) < len(upd_keys):
+            updates = updates.dropDuplicates(pk)
+        return updates, sorted(touched), touch_keys
+
+    def _spark_touch(
+        self, updates: DataFrame, deletes: DataFrame | None
+    ) -> tuple[DataFrame, list[int], DataFrame]:
+        """``(updates, touched buckets, touched keys)`` computed by Spark
+        over key-distinct ``updates`` / ``deletes``."""
+        touch_keys = updates.select(*self.primary_key)
+        if deletes is None:
             upd = touch_keys.withColumn("__bucket", self._bucket_col())
             touched = [
                 r["__bucket"] for r in upd.select("__bucket").distinct().collect()
             ]
+            return updates, touched, touch_keys
+        # ONE stats job answers both driver questions (r13, guide §2
+        # "remove actions outright"): the touched-bucket set AND the
+        # ambiguity guard (a key in both updates and deletes is
+        # ambiguous — Iceberg MERGE likewise rejects multi-action
+        # matches). Both sides are already key-distinct, so a key
+        # seen from both sources groups to min=0/max=1.
+        tagged = (
+            updates.select(*self.primary_key)
+            .withColumn("__src", F.lit(0))
+            .unionByName(deletes.withColumn("__src", F.lit(1)))
+        )
+        stat = (
+            tagged.groupBy(*self.primary_key)
+            .agg(
+                F.min("__src").alias("__mn"),
+                F.max("__src").alias("__mx"),
+            )
+            .withColumn("__bucket", self._bucket_col())
+            .agg(
+                F.collect_set("__bucket").alias("bks"),
+                F.max((F.col("__mn") == 0) & (F.col("__mx") == 1)).alias(
+                    "amb"
+                ),
+            )
+            .collect()[0]
+        )
+        if stat["amb"]:
+            raise ValueError(
+                f"{self.name}: merge() key appears in both updates and deletes"
+            )
+        return updates, list(stat["bks"] or []), touch_keys.unionByName(deletes)
 
+    def _merge_inner(
+        self, updates: DataFrame, touched: list[int], touch_keys: DataFrame
+    ) -> Snapshot:
+        parent = self.snapshot()
+        version = self._next_version()
         if parent is None or not parent.files:
             files = self._write_files(updates, version, bucketed=True)
             n = self._rows_in(files)
             return self._commit("merge", files, n, n, summary={"touched_buckets": touched})
 
         # split parent files into touched vs untouched buckets
-        def bucket_of(relpath: str) -> int | None:
-            for part in relpath.split(os.sep):
-                if part.startswith("__bucket="):
-                    return int(part.split("=", 1)[1])
-            return None
-
         touched_set = set(touched)
-        keep_files = [f for f in parent.files if bucket_of(f) not in touched_set]
-        old_touched = [f for f in parent.files if bucket_of(f) in touched_set]
+        keep_files = [f for f in parent.files if _bucket_of_path(f) not in touched_set]
+        old_touched = [f for f in parent.files if _bucket_of_path(f) in touched_set]
 
         rel = f"data/s{version}"
         out = os.path.join(self.path, rel)
@@ -3839,9 +3894,16 @@ class LakeTable:
 
     def write_hot_batch(self, df: DataFrame, batch_id: int) -> None:
         """Stage a stream micro-batch in the hot store (the Fluss role).
-        Idempotent per batch_id: a retried batch overwrites itself."""
+        Idempotent per batch_id: a retried batch overwrites itself.
+
+        Staged files are written under the lake write contract — the
+        table schema and constraints (``_prepare``), INT64-micros
+        timestamps (footer min/max) and the table codec — so ``tier()``
+        of a layout-free log table adopts them as lake data files as
+        they are, with no Spark job."""
         df = self._enforce_not_null(self._prepare(df))
-        df.write.mode("overwrite").parquet(self._hot_dir(batch_id))
+        with self._micros_timestamps():
+            self._writer(df).mode("overwrite").parquet(self._hot_dir(batch_id))
 
     def _read_hot_batches(self, batches: list[int], with_batch_id: bool) -> DataFrame:
         """Read the given staged batches; optionally tag each row with its
@@ -3881,10 +3943,21 @@ class LakeTable:
         Append semantics for log tables, MERGE for PK tables — matching
         the reference tiering job (docker-compose.yml:95-111).
 
+        Log tables with no layout to apply (no partition spec, no
+        ``write.sort-order`` / ``write.clustered-by`` /
+        ``write.zorder-by``) whose staged files carry the table's write
+        schema ADOPT them: each staged parquet file is hard-linked into
+        ``data/s{N}/`` (the hot store sits inside the table directory, so
+        on the same filesystem) and committed — zero Spark jobs, no row
+        re-read or rewritten. Other tables rewrite the staged rows
+        through ``append()`` / ``merge()``.
+
         The watermark advance rides the merge/append commit itself (via
         ``_pending_commit_extra``), so a crash can never leave a batch
         visible in both the lake and the hot store: either the snapshot
-        (files + watermark) landed atomically, or neither did.
+        (files + watermark) landed atomically, or neither did. Links made
+        before a crash are unreferenced debris: ``remove_orphan_files``
+        reclaims them, and a retried ``tier()`` re-adopts the batches.
 
         Cross-batch ordering: for PK tables the reference's tiering is
         log-ordered — a key written in batch 5 and again in batch 7 must
@@ -3898,13 +3971,16 @@ class LakeTable:
         if not batches:
             return None
         new_wm = max(batches)
-        df = self._read_hot_batches(batches, with_batch_id=bool(self.primary_key))
         self._pending_commit_extra = {
             "operation": "tier",
             "hot_watermark": new_wm,
             "summary": {"tiered_batches": batches},
         }
         try:
+            staged = self._adoptable_hot_files(batches)
+            if staged is not None:
+                return self._commit_append(self._adopt(staged))
+            df = self._read_hot_batches(batches, with_batch_id=bool(self.primary_key))
             if self.primary_key:
                 from pyspark.sql.window import Window
 
@@ -3920,6 +3996,46 @@ class LakeTable:
             return self.append(df.select(*self.schema.fieldNames()))
         finally:
             self._pending_commit_extra = None
+
+    def _adoptable_hot_files(self, batches: list[int]) -> list[tuple[int, str]] | None:
+        """``(batch, path)`` of every staged parquet file of ``batches`` if
+        ``tier()`` may adopt them as they are, else None: a log table with
+        no layout to apply, and every file written under the table's
+        current column names and types (Spark records its write schema in
+        the footer; a file staged before a schema change fails the test
+        and is rewritten instead). Footer reads only."""
+        import pyarrow.parquet as pq
+
+        if self.primary_key or self.partition_spec or any(
+            self.properties.get(p)
+            for p in ("write.sort-order", "write.clustered-by", "write.zorder-by")
+        ):
+            return None
+        want = [(f.name, f.dataType) for f in self.schema.fields]
+        staged = [(b, f) for b in batches for f in _list_parquet(self._hot_dir(b))]
+        for _, f in staged:
+            meta = pq.read_schema(f).metadata or {}
+            raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+            got = T.StructType.fromJson(json.loads(raw)) if raw else None
+            if got is None or [(g.name, g.dataType) for g in got.fields] != want:
+                return None
+        return staged
+
+    def _adopt(self, staged: list[tuple[int, str]]) -> list[str]:
+        """Hard-link staged files into ``data/s{next version}/``; returns
+        their table-relative paths. The target dir is cleared first, like
+        every write's overwrite mode: it can only hold debris of a commit
+        that never landed (snapshot ids skip every existing snapshot)."""
+        rel = f"data/s{self._next_version()}"
+        out = os.path.join(self.path, rel)
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        files = []
+        for b, src in staged:
+            name = f"batch{b}-{os.path.basename(src)}"
+            os.link(src, os.path.join(out, name))
+            files.append(os.path.join(rel, name))
+        return files
 
     def stream_appends(self) -> DataFrame:
         """U2: subscribe to a log table as a stream — the reference's

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 
 def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -32,17 +32,25 @@ def arrow_local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     else:  # StructType
         struct = schema
     fields = [(f.name, f.dataType.simpleString()) for f in struct.fields]
-    rows = list(rows)
+    names = [n for n, _ in fields]
+    # a named Row is a tuple in ITS field order, which need not be the
+    # schema's: map it by name, or from_records would read it by position
+    rows = [
+        tuple(r[n] for n in names)
+        if isinstance(r, Row) and hasattr(r, "__fields__")
+        else r
+        for r in rows
+    ]
     if not rows:
         return spark.createDataFrame([], schema)
-    pdf = pd.DataFrame.from_records(rows, columns=[n for n, _ in fields])
+    pdf = pd.DataFrame.from_records(rows, columns=names)
     # from_records coerces a mixed int/None column (e.g.
     # $snapshots.parent_id — None for the first snapshot) to float64 +
     # NaN, which integer Spark types reject. Rebuild ONLY such columns
     # as object dtype from the original rows (exact ints, real nulls);
     # the common all-int/all-string columns keep the fast C path. The
     # positional rebuild requires sequence rows — assert that rather
-    # than silently scrambling a dict/Row caller's values (r12 ADVICE).
+    # than silently scrambling a dict caller's values (r12 ADVICE).
     for i, (n, t) in enumerate(fields):
         if pdf[n].dtype.kind == "f" and not t.startswith(
             ("double", "float", "decimal")

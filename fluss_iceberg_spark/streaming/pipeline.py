@@ -24,6 +24,14 @@ delta, then upsert ``revenue = existing + delta`` into the PK table.
 Idempotence: the last applied batch id is recorded in the commit summary;
 a replayed batch (crash/retry) is skipped (ST5 exactly-once).
 
+Per-tick Spark actions: the hot write, one collect of the revenue delta
+(already folded into the current revenue), and the bucket write of the
+``nation_revenue`` merge. The delta holds at most one row per nation plus
+the NULL group — it is bounded by the broadcast nation dimension — so it
+comes to the driver as an Arrow table and the merge takes its touched
+buckets there, with no job of its own. Tiering ``enriched_orders`` adopts
+the staged files and runs no Spark job.
+
 Scale: per batch the fact side is joined against broadcast dim snapshots
 (shuffle-free), and the merge exchanges only group-cardinality rows. At
 1000 executors the only wide operation is the delta aggregation, bounded
@@ -136,11 +144,15 @@ class ReferencePipeline:
                     .alias("revenue"),
                 )
             )
+            # group-sized (≤ one row per broadcast nation + NULL): collect
+            # it once, so merge() sees a driver-local frame and its only
+            # Spark action is the bucket write
+            local = self.spark.createDataFrame(merged.toArrow(), merged.schema)
             # the idempotence marker rides the merge commit's own atomic
             # snapshot write — a crash can never commit the revenue delta
             # without the batch_id, so a replayed batch is always detected
             self.revenue._pending_commit_extra = {"summary": {"batch_id": batch_id}}
-            self.revenue.merge(merged)
+            self.revenue.merge(local)
         finally:
             self.revenue._pending_commit_extra = None
             enriched.unpersist()

@@ -12,6 +12,7 @@ Writes /tmp/profile_<query>.json + prints a compact table.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -144,11 +145,15 @@ def parse_log(path: str) -> list[dict]:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser(description="Per-query Spark job profile.")
+    ap.add_argument("queries", nargs="+", help="registered query names")
+    ap.add_argument("--sf", default=sf_dir,
+                    help="TPC-H data dir (default: $SPARK_GRAFT_SF_DIR)")
+    args = ap.parse_args()
     registry.load_all()
-    for name in args:
-        r = run_one(name, sf_dir)
+    for name in args.queries:
+        r = run_one(name, args.sf)
         with open(f"/tmp/profile_{name}.json", "w") as f:
             json.dump(r, f, indent=1)
         print(

@@ -84,3 +84,17 @@ def test_repair_rejects_non_sequence_rows(spark):
             [{"k": 1, "v": None}, {"k": 2, "v": 7}],
             "k long, v long",
         )
+
+
+def test_named_rows_map_by_field_name(spark):
+    """Named Rows whose field order differs from the schema (including the
+    int/None repair column) map by name, not by position."""
+    from pyspark.sql import Row
+
+    df = arrow_local_df(
+        spark,
+        [Row(op="a", parent_id=None, k=1), Row(op=None, parent_id=7, k=2)],
+        "k long, parent_id long, op string",
+    )
+    rows = sorted(df.collect(), key=lambda r: r.k)
+    assert [tuple(r) for r in rows] == [(1, None, "a"), (2, 7, None)]

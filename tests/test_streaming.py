@@ -70,6 +70,39 @@ def test_cold_le_union_and_monotonic(spark):
         assert cold1 == union1  # fully tiered now
 
 
+def test_tick_spark_jobs_bounded(spark):
+    """One pipeline tick (process_order_batch + tier_enriched) issues at
+    most 10 Spark jobs: the hot write, one collect of the revenue delta
+    and the merge's bucket write — tiering adopts the staged files and
+    the merge takes its touched buckets on the driver."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def jobs() -> set[int]:
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return set(st.getJobIdsForGroup(None)) | (
+            set(st.getJobIdsForGroup(group)) if group else set())
+
+    orders = faker.orders_batch(spark, 400).localCheckpoint()
+    customers = faker.customers_batch(spark, 50).dropDuplicates(
+        ["cust_key"]).localCheckpoint()
+    nations = faker.nations_batch(spark, 40).dropDuplicates(
+        ["nation_key"]).localCheckpoint()
+    with tempfile.TemporaryDirectory() as d:
+        pipe = ReferencePipeline(spark, LakeCatalog(spark, d))
+        per_tick = []
+        for b in range(4):
+            before = jobs()
+            pipe.process_order_batch(
+                orders.filter(F.pmod(F.col("order_key"), F.lit(4)) == b),
+                customers, nations, b,
+            )
+            pipe.tier_enriched()
+            per_tick.append(len(jobs() - before))
+        assert pipe.enriched.read_hot().count() == 0
+    assert max(per_tick) <= 10, per_tick
+
+
 def test_event_time_watermark_drops_late_data(spark):
     """Event-time semantics (beyond reference parity — the reference is
     processing-time only, SURVEY §2.8): windowed agg with a 1-hour
